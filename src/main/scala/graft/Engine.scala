@@ -12,6 +12,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    on a 1000-executor cluster AQE re-coalesces from a higher initial value.
   *  - All reads are columnar parquet through the vectorized reader; queries
   *    select narrow column sets so pruning + predicate pushdown reach the scan.
+  *  - `file://` is rebound, for both the FileSystem and the FileContext API,
+  *    to the fork-free local filesystem (`sources/LocalFs.scala`). Without
+  *    native libhadoop the stock one forks `chmod`/`readlink` on every file,
+  *    directory and rename: about 130 forks per stateful microbatch, on the
+  *    checkpoint and state-store writes that set its latency. Checksums stay.
+  *    Caveat: Hadoop caches the `file://` FileSystem once per JVM and ignores
+  *    the conf on later lookups, so the first lookup in a JVM fixes the class.
+  *    Any new entry point must build its session through `Engine.session`
+  *    before it touches a Hadoop FileSystem.
   */
 object Engine {
   def session(appName: String = "graft", cores: String = "32"): SparkSession = {
@@ -43,6 +52,10 @@ object Engine {
       // explicit-schema mandate: validate physical type at load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

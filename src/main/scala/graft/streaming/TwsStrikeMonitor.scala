@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
   TimeMode, TimerValues, ValueState}
@@ -25,7 +26,10 @@ import graft.streaming.StrikeMonitor.{Flagged, Message, StrikeState,
   */
 object TwsStrikeMonitor {
 
-  class StrikeProcessor(reserved: Set[String], salaries: Map[Long, Double],
+  /** Holds broadcast handles, not the salary map itself: the processor
+    * is serialized into every state task of every microbatch. */
+  class StrikeProcessor(reserved: Broadcast[Set[String]],
+                        salaries: Broadcast[Map[Long, Double]],
                         defaultSalary: Double)
       extends StatefulProcessor[Long, Message, Flagged] {
 
@@ -38,8 +42,8 @@ object TwsStrikeMonitor {
     override def handleInputRows(empId: Long, rows: Iterator[Message],
                                  timerValues: TimerValues): Iterator[Flagged] = {
       val st = if (state.exists()) state.get() else null
-      val (next, flagged) = foldMessages(rows.toSeq, st, reserved,
-        salaries.getOrElse(empId, defaultSalary))
+      val (next, flagged) = foldMessages(rows.toSeq, st, reserved.value,
+        salaries.value.getOrElse(empId, defaultSalary))
       state.update(next)
       flagged.iterator
     }
@@ -56,7 +60,8 @@ object TwsStrikeMonitor {
     messages
       .groupByKey(_.emp_id)
       .transformWithState(
-        new StrikeProcessor(reserved, salaries, defaultSalary),
+        new StrikeProcessor(spark.sparkContext.broadcast(reserved),
+          spark.sparkContext.broadcast(salaries), defaultSalary),
         TimeMode.None(), OutputMode.Append())
   }
 
